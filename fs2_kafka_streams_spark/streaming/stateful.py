@@ -3,9 +3,15 @@
 Reference semantics (``streams/Tables.scala:110-138``): consume a keyed
 changelog in chunks, upsert latest value per key into a RocksDB-backed
 store, expose the materialized view. Here the same contract runs as a
-Structured Streaming query: per-key state via ``applyInPandasWithState``
-(Arrow-batched), the state store persisting between micro-batches, a
-foreachBatch upsert assembling the final view.
+Structured Streaming query: one fold (:func:`_fold` — the (ts, event_id)-max
+state tuple per key, optionally tombstone-aware — emitting one view row per
+touched key, :func:`_view_row`) runs on either state API
+(``applyInPandasWithState`` via :func:`_apws_fold`, or
+``transformWithStateInPandas`` via :class:`LatestProcessor`), the state
+store persisting between micro-batches, and a foreachBatch upsert sink
+appends the update rows to a keyed parquet log whose per-key head
+(:func:`_log_head`, the only place that orders sink rows) is the view and
+what compaction keeps.
 
 At scale this is the right shape: state is partitioned by key across
 executors (RocksDB state store — configure
@@ -21,6 +27,7 @@ import shutil
 import tempfile
 import uuid
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -53,13 +60,13 @@ _OUTPUT_SCHEMA = (
     "user_id long, event_id long, ts timestamp_ntz, "
     "event_type string, value double, props string"
 )
+_OUTPUT_SCHEMA_DEAD = _OUTPUT_SCHEMA + ", _dead boolean"
 
 
 def _pick_latest(pdf: pd.DataFrame, tombstone_col: str | None = None):
     """(ts, event_id)-max row of ONE pandas micro-batch frame as a state
     tuple ``(event_id, ts_us, event_type, value, props[, dead])`` plus the
-    winning index — the single fold step every stateful engine here shares
-    (four near-identical copies of it had already been drifting).
+    winning index — the per-frame step of :func:`_fold`.
 
     NULL-safe on the payload columns: a NULL event_type/props stays None
     (``str()`` would store the literal string ``'None'``, silently
@@ -78,8 +85,6 @@ def _pick_latest(pdf: pd.DataFrame, tombstone_col: str | None = None):
     # throwaway two-column DataFrame sort — this runs once per key per
     # micro-batch (measured 8.8× per call, byte-identical on the
     # randomized NULL/tie sweep in tests/test_fold_vectorized.py).
-    import numpy as np
-
     ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
     ids = pdf["event_id"].to_numpy()
     # max by (ts, id), NULLS FIRST on both: NaT is already the
@@ -111,81 +116,81 @@ def _fold_rank(cand) -> tuple:
     return (cand[1], cand[0] is not None, 0 if cand[0] is None else cand[0])
 
 
-def _latest_update(key, pdf_iter, state: GroupState):
-    """Keep the (ts, event_id)-max row per key across micro-batches.
+def _fold(best, frames, tombstone_col: str | None = None):
+    """Fold pandas micro-batch frames into a key's state tuple: the
+    (ts, event_id)-max of ``best`` (the stored tuple, or None for a new
+    key) and every frame's :func:`_pick_latest` candidate — the one fold
+    both state APIs run. Returns ``(best, source)``; ``source`` is the
+    ``(frame, index)`` the new best came from, or None when the stored
+    tuple still wins (nothing to write back).
 
-    Last-write-wins upsert exactly as the reference's in-memory table
-    (``streams/Table.scala:52-56``): state overwrite, ordered by changelog
-    position — here (ts, event_id).
-    """
-    best = tuple(state.get) if state.exists else None
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        cand, _ = _pick_latest(pdf)
-        if best is None or _fold_rank(cand) > _fold_rank(best):
-            best = cand
-    if best is not None:
-        state.update(best)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "event_id": [best[0]],
-                "ts": [pd.to_datetime(best[1], unit="us")],
-                "event_type": [best[2]],
-                "value": [best[3]],
-                "props": [best[4]],
-            }
-        )
-
-
-def _latest_update_deletes(tombstone_col: str):
-    """Last-write-wins upsert WITH tombstones: if a key's latest change (by
-    ``(ts, event_id)``) is a delete marker, a tombstone MARKER — carrying
-    the delete's own ``(ts, event_id)`` — is kept in state and a ``_dead``
-    row is emitted so the sink drops the key from the materialized view.
-
-    Keeping the marker (instead of ``state.remove()``) makes the fold
-    order-insensitive across micro-batches: a record OLDER than the
-    tombstone arriving in a LATER micro-batch loses the ``(ts, event_id)``
-    comparison and stays dead — identical to the batch MERGE, which keeps
+    With ``tombstone_col`` the tuple carries the delete flag and a
+    tombstone is kept as the head like any other change, so a record
+    OLDER than it arriving in a later micro-batch loses the comparison
+    and the key stays dead — identical to the batch MERGE, which keeps
     the (ts, event_id)-max tombstone (``operators/incremental.py``). A
     record NEWER than the tombstone re-inserts the key, as on a compacted
-    topic. The kept marker makes dead-key state O(keys-ever-seen) on this
-    engine (see the ``_STATE_SCHEMA_DEAD`` retention note — the typed-state
-    engine's ``tombstone_retention`` is the state GC;
-    :func:`compact_upsert_log` reclaims the SINK log only).
+    topic (``Table.delete``, ``streams/Table.scala:31``; duality-tested,
+    including the out-of-order late-record case, in
+    tests/test_streaming_duality.py)."""
+    source = None
+    for pdf in frames:
+        if pdf.empty:
+            continue
+        cand, idx = _pick_latest(pdf, tombstone_col)
+        if best is None or _fold_rank(cand) > _fold_rank(best):
+            best, source = cand, (pdf, idx)
+    return best, source
 
-    This drives the API the reference exposes but never itself emits
-    (``Table.delete``, ``streams/Table.scala:31``; its ``Tables.scala``
-    changelog is upsert-only — SURVEY invariant 6). Duality-tested —
-    including the out-of-order late-record case — in
-    tests/test_streaming_duality.py::test_streaming_deletes_match_batch_merge.
-    """
+
+def _view_row(key, best, tombstone_col: str | None = None) -> pd.DataFrame:
+    """The update row a fold emits for its key's state tuple ``best``;
+    with ``tombstone_col`` it carries the ``_dead`` flag the upsert sink
+    drops tombstoned keys by."""
+    row = {
+        "user_id": [key[0]],
+        "event_id": [best[0]],
+        "ts": [pd.to_datetime(best[1], unit="us")],
+        "event_type": [best[2]],
+        "value": [best[3]],
+        "props": [best[4]],
+    }
+    if tombstone_col is not None:
+        row["_dead"] = [best[5]]
+    return pd.DataFrame(row)
+
+
+def _fold_schemas(tombstone_col: str | None) -> tuple[str, str]:
+    """(state schema, emitted row schema) of the fold."""
+    if tombstone_col is None:
+        return _STATE_SCHEMA, _OUTPUT_SCHEMA
+    return _STATE_SCHEMA_DEAD, _OUTPUT_SCHEMA_DEAD
+
+
+def _apws_fold(grouped, tombstone_col: str | None = None) -> DataFrame:
+    """The fold on ``applyInPandasWithState``: last-write-wins upsert per
+    group exactly as the reference's in-memory table
+    (``streams/Table.scala:52-56``) — state overwrite, ordered by
+    changelog position, here (ts, event_id)."""
+    state_schema, row_schema = _fold_schemas(tombstone_col)
 
     def update(key, pdf_iter, state: GroupState):
-        best = tuple(state.get) if state.exists else None
-        for pdf in pdf_iter:
-            if pdf.empty:
-                continue
-            cand, _ = _pick_latest(pdf, tombstone_col)
-            if best is None or _fold_rank(cand) > _fold_rank(best):
-                best = cand
+        best, source = _fold(
+            tuple(state.get) if state.exists else None, pdf_iter,
+            tombstone_col,
+        )
         if best is not None:
-            state.update(best)
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "event_id": [best[0]],
-                    "ts": [pd.to_datetime(best[1], unit="us")],
-                    "event_type": [best[2]],
-                    "value": [best[3]],
-                    "props": [best[4]],
-                    "_dead": [best[5]],
-                }
-            )
+            if source is not None:
+                state.update(best)
+            yield _view_row(key, best, tombstone_col)
 
-    return update
+    return grouped.applyInPandasWithState(
+        update,
+        outputStructType=row_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
@@ -204,61 +209,25 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
 
     class LatestProcessor(StatefulProcessor):
         """StatefulProcessor for ``transformWithStateInPandas``: the same
-        last-write-wins upsert as :func:`_latest_update`, on the newer
-        arbitrary-state API with a typed ValueState handle — the closest
-        Spark analogue of the reference's typed RocksDB table
-        (``streams/Table.scala:115-137``, ``Key.scala:3-17``)."""
+        :func:`_fold` as :func:`_apws_fold`, on the newer arbitrary-state
+        API with a typed ValueState handle — the closest Spark analogue of
+        the reference's typed RocksDB table (``streams/Table.scala:115-137``,
+        ``Key.scala:3-17``).
 
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("latest", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            best = tuple(self._state.get()) if self._state.exists() else None
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                cand, _ = _pick_latest(pdf)
-                if best is None or _fold_rank(cand) > _fold_rank(best):
-                    best = cand
-            if best is not None:
-                self._state.update(best)
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "event_id": [best[0]],
-                        "ts": [pd.to_datetime(best[1], unit="us")],
-                        "event_type": [best[2]],
-                        "value": [best[3]],
-                        "props": [best[4]],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    class LatestDeletesProcessor(StatefulProcessor):
-        """Tombstone-aware twin of :class:`LatestProcessor` on the typed-state
-        API: the (ts, event_id)-max change wins; when that change is a delete
-        marker the tombstone itself is KEPT in the ValueState (with its
-        ordering tuple) so a late older record cannot resurrect the key —
-        the same order-insensitive fold as :func:`_latest_update_deletes`,
-        duality-tested against it and against the batch MERGE
-        (``Table.delete``, ``streams/Table.scala:31``).
-
-        ``retention_us`` (requires event-time mode + a watermark, see
-        :func:`latest_by_key_tws_with_deletes`) is Kafka's
-        ``delete.retention.ms`` for the STATE STORE: storing a tombstone
-        arms a timer at ``tombstone_ts + retention``; when the watermark
-        passes it the marker is cleared, reclaiming the dead key's state
-        slot — so state is O(live keys + tombstones-within-retention)
-        instead of O(keys-ever-seen). Kafka's own caveat applies: a record
-        OLDER than the tombstone arriving after retention has expired can
-        resurrect the key (the marker that would have out-ordered it is
-        gone). Without retention the marker is permanent and the fold is
-        order-insensitive forever."""
+        ``retention_us`` (with ``tombstone_col``; requires event-time mode
+        + a watermark, see :func:`latest_by_key_tws_with_deletes`) is
+        Kafka's ``delete.retention.ms`` for the STATE STORE: storing a
+        tombstone arms a timer at ``tombstone_ts + retention``; when the
+        watermark passes it the marker is cleared, reclaiming the dead
+        key's state slot — so state is O(live keys + tombstones-within-
+        retention) instead of O(keys-ever-seen). Kafka's own caveat
+        applies: a record OLDER than the tombstone arriving after retention
+        has expired can resurrect the key (the marker that would have
+        out-ordered it is gone). Without retention the marker is permanent
+        and the fold is order-insensitive forever."""
 
         def __init__(
-            self, tombstone_col: str = "deleted",
+            self, tombstone_col: str | None = None,
             retention_us: int | None = None,
         ):
             self._tombstone_col = tombstone_col
@@ -269,13 +238,13 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
             # retention mode widens the state with tz_off_us (wall→UTC
             # offset captured when the row was stored, for timer-clock
             # conversion — see PatternTimerProcessor); without retention
-            # the schema stays the original 6 fields so durable
+            # the schema stays the original 5/6 fields so durable
             # checkpoints written by the pre-retention engine restart
             # unchanged (a widened value schema would fail RocksDB's
             # schema-compatibility check). A checkpoint written while the
             # widening was unconditional must be reopened with
             # ``tombstone_retention`` set (7-field schema) or rebuilt.
-            schema = _STATE_SCHEMA_DEAD
+            schema, _ = _fold_schemas(self._tombstone_col)
             if self._retention_us is not None:
                 schema = schema + ", tz_off_us long"
             self._state = handle.getValueState("latest", schema)
@@ -285,56 +254,33 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
 
         def handleInputRows(self, key, rows, timerValues):
             prev = tuple(self._state.get()) if self._state.exists() else None
-            best = prev[:6] if prev is not None else None
-            best_frame = None
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                cand, idx = _pick_latest(pdf, self._tombstone_col)
-                if best is None or _fold_rank(cand) > _fold_rank(best):
-                    best = cand
-                    best_frame = (pdf, idx)
-            if best is not None:
-                # off_us is consumed only in retention mode, where a
-                # changed `best` always came from a batch frame (best
-                # starts as prev[:6] and moves only via cand), so the
-                # branch below always recomputes it before any use
-                off_us = 0
-                if self._retention_us is not None and best_frame is not None:
-                    # _utc_us is the LAST column by construction (appended
-                    # by the retention-mode source projection; TWS renames
-                    # derived columns positionally) — offset of the stored
-                    # row itself, robust across DST-spanning batches
-                    pdf, idx = best_frame
-                    off_us = int(best[1]) - int(pdf.iloc[:, -1].loc[idx])
-                changed = prev is None or best != prev[:6]
-                if changed:
-                    self._state.update(
-                        best + (off_us,)
-                        if self._retention_us is not None
-                        else best
-                    )
-                    if self._retention_us is not None:
-                        wm = timerValues.getCurrentWatermarkInMs()
-                        if prev is not None and prev[5]:
-                            old_exp = self._expiry_ms(prev[1], prev[6])
-                            if old_exp > wm:
-                                self._handle.deleteTimer(old_exp)
-                        if best[5]:
-                            self._handle.registerTimer(
-                                self._expiry_ms(best[1], off_us)
-                            )
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "event_id": [best[0]],
-                        "ts": [pd.to_datetime(best[1], unit="us")],
-                        "event_type": [best[2]],
-                        "value": [best[3]],
-                        "props": [best[4]],
-                        "_dead": [best[5]],
-                    }
-                )
+            # [:6] leaves out retention mode's tz_off_us
+            best, source = _fold(
+                prev[:6] if prev is not None else None, rows,
+                self._tombstone_col,
+            )
+            if best is None:
+                return
+            if source is not None and self._retention_us is None:
+                self._state.update(best)
+            elif source is not None:
+                # retention mode: store best with its wall→UTC offset and
+                # move the tombstone's expiry timer along with it.
+                # _utc_us is the LAST column by construction (appended by
+                # the retention-mode source projection; TWS renames
+                # derived columns positionally) — offset of the stored row
+                # itself, robust across DST-spanning batches
+                pdf, idx = source
+                off_us = int(best[1]) - int(pdf.iloc[:, -1].loc[idx])
+                self._state.update(best + (off_us,))
+                wm = timerValues.getCurrentWatermarkInMs()
+                if prev is not None and prev[5]:
+                    old_exp = self._expiry_ms(prev[1], prev[6])
+                    if old_exp > wm:
+                        self._handle.deleteTimer(old_exp)
+                if best[5]:
+                    self._handle.registerTimer(self._expiry_ms(best[1], off_us))
+            yield _view_row(key, best, self._tombstone_col)
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             # clear ONLY a tombstone whose retention is genuinely due —
@@ -385,27 +331,27 @@ def _tws_prepare(spark: SparkSession) -> dict:
     }
 
 
+def _tws_fold(
+    grouped, tombstone_col: str | None = None, retention_us: int | None = None
+) -> DataFrame:
+    """The fold on ``transformWithStateInPandas`` through
+    :class:`LatestProcessor`; retention runs on event-time timers."""
+    return grouped.transformWithStateInPandas(
+        statefulProcessor=LatestProcessor(tombstone_col, retention_us),
+        outputStructType=_fold_schemas(tombstone_col)[1],
+        outputMode="Update",
+        timeMode="None" if retention_us is None else "EventTime",
+    )
+
+
 def latest_by_key_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7/A9 on ``transformWithStateInPandas`` — returns the final view
     (must equal batch Q17; cross-checked by the driver oracle as q38b)."""
-    conf = _tws_prepare(spark)
-    proc = LatestProcessor()
-
-    # 2 files/trigger — cross-batch typed state still exercised (q38's
-    # rationale) at half the micro-batch machinery cost
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_dir(sf_dir, "events"))
-    )
-    updates = src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
     from fs2_kafka_streams_spark.streaming.conf import pinned_conf
 
+    conf = _tws_prepare(spark)
+    src = _changelog_stream(spark, replay_dir(sf_dir, "events"))
+    updates = _tws_fold(src.groupBy("user_id"))
     with pinned_conf(spark, conf):
         return _run_upsert_sink(spark, updates)
 
@@ -419,9 +365,9 @@ def latest_by_key_tws_with_deletes(
     tombstone_retention: str | None = None,
 ) -> DataFrame:
     """:func:`latest_by_key_streaming_with_deletes` on the typed-state API —
-    same changelog-with-tombstones contract, same materialized view, driven
-    through :class:`LatestDeletesProcessor`. Both state APIs run the same
-    duality test against the batch MERGE
+    same changelog-with-tombstones contract, same materialized view, the
+    same :func:`_fold` driven through :class:`LatestProcessor`. Both state
+    APIs run the same duality test against the batch MERGE
     (tests/test_streaming_duality.py).
 
     ``tombstone_retention`` (e.g. ``"5 minutes"``) enables the state-store
@@ -434,18 +380,13 @@ def latest_by_key_tws_with_deletes(
     an EXPIRED tombstone can resurrect — Kafka's documented caveat."""
     from pyspark.sql import functions as F
 
+    from fs2_kafka_streams_spark.streaming.conf import pinned_conf
+
     conf = _tws_prepare(spark)
-    schema = EVENTS_SCHEMA + f", {tombstone_col} boolean"
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_path)
-    )
+    src = _changelog_stream(spark, replay_path, tombstone_col)
     retention_us = None
-    time_mode = "None"
     if tombstone_retention is not None:
         retention_us = duration_us(tombstone_retention)
-        time_mode = "EventTime"
         # watermark rides a session-tz cast column, data stays NTZ;
         # _utc_us LAST so the processor reads it positionally (the q57b
         # technique — see streaming/cep.py::pattern_matches_stream_tws)
@@ -458,20 +399,10 @@ def latest_by_key_tws_with_deletes(
                 "props", tombstone_col, "_utc_us",
             )
         )
-    updates = src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=LatestDeletesProcessor(
-            tombstone_col, retention_us=retention_us
-        ),
-        outputStructType=_OUTPUT_SCHEMA + ", _dead boolean",
-        outputMode="Update",
-        timeMode=time_mode,
-    )
-    from fs2_kafka_streams_spark.streaming.conf import pinned_conf
-
+    updates = _tws_fold(src.groupBy("user_id"), tombstone_col, retention_us)
     with pinned_conf(spark, conf):
         return _run_upsert_sink(
-            spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-            row_schema=_OUTPUT_SCHEMA + ", _dead boolean", dead_col="_dead",
+            spark, updates, checkpoint=checkpoint, sink_dir=sink_dir
         )
 
 
@@ -517,41 +448,44 @@ def _read_upsert_log(
     ).parquet(sink_dir)
 
 
-def _log_head(
-    log: DataFrame,
-    dead_col: str | None = None,
-    order_cols: tuple[str, ...] = ("_epoch", "ts", "event_id"),
-) -> DataFrame:
-    """Latest row per key from the append log; with ``dead_col``, keys
-    whose head is a tombstone drop out — exactly a compacted topic's read
-    view (tombstoned keys vanish once the tombstone is the head).
+def _log_head(log: DataFrame) -> DataFrame:
+    """Head row per key of the append log, every log column kept — the
+    one place that decides which sink row heads a key: the
+    ``(_epoch, ts, event_id)``-max.
 
-    ``order_cols``: the single-state folds emit MONOTONE rows per key, so
-    commit order (``_epoch`` first) is also data order. The SALTED fold's
-    per-(key, salt) partials are monotone only within a salt — a later
-    epoch may carry an older row from a different salt — so it orders by
-    the data itself, ``("ts", "event_id")``, which is what makes the
-    log-head aggregation the fold's associative second level.
+    The single-state folds emit MONOTONE rows per key, so commit order
+    (``_epoch`` first) is also data order, and a row appended after a
+    compaction (higher epoch) wins. The SALTED fold's per-(key, salt)
+    partials are monotone only within a salt — a later epoch may carry an
+    older row from a different salt — so it appends them with a NULL
+    ``_epoch`` (no commit order): NULL orders first and ties among NULLs,
+    so its heads order by the data ``(ts, event_id)``, which is what
+    makes this aggregation the salted fold's associative second level.
     """
-    from pyspark.sql import functions as F
-
     from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
 
-    value_cols = ["event_id", "ts", "event_type", "value", "props"]
-    if dead_col is not None:
-        value_cols = value_cols + [dead_col]
-    head = latest_by_key(
+    return latest_by_key(
         log,
         key_cols=["user_id"],
-        order_cols=list(order_cols),
-        value_cols=value_cols,
+        order_cols=["_epoch", "ts", "event_id"],
+        value_cols=[c for c in log.columns if c not in ("user_id", "_bucket")],
         # (_epoch, ts, event_id) is unique per key per append; an
         # at-least-once duplicate append ties only against an IDENTICAL
-        # row, so dropping the value tie-break stays deterministic. The
-        # salted ordering (ts, event_id) ties only when a salt state
-        # re-emits its unchanged best row — also identical content.
+        # row, so dropping the value tie-break stays deterministic. A
+        # salted row (NULL _epoch) ties only when a salt state re-emits
+        # its unchanged best row — also identical content.
         unique_order=True,
     )
+
+
+def _log_view(log: DataFrame, dead_col: str | None = None) -> DataFrame:
+    """Materialized view of the append log: its :func:`_log_head` rows;
+    with ``dead_col``, keys whose head is a tombstone drop out — exactly a
+    compacted topic's read view (tombstoned keys vanish once the
+    tombstone is the head)."""
+    from pyspark.sql import functions as F
+
+    head = _log_head(log).drop("_epoch")
     if dead_col is not None:
         head = head.filter(~F.col(dead_col)).drop(dead_col)
     return head
@@ -562,9 +496,9 @@ def compact_upsert_log(
     retain_tombstones: bool = True,
 ) -> tuple[int, int]:
     """Kafka-style log compaction for the upsert sink: rewrite the append
-    log to exactly one row per key — the (epoch, ts, event_id)-max one,
-    keeping its original ``_epoch`` so later appends (higher epochs) still
-    order after it. Returns (rows_before, rows_after).
+    log to exactly one row per key — its :func:`_log_head` row, keeping
+    its original ``_epoch`` so later appends (higher epochs) still order
+    after it. Returns (rows_before, rows_after).
 
     For a DELETES sink (``latest_by_key_streaming_with_deletes``), pass its
     ``dead_col``: the tombstone flag must survive compaction — compacting
@@ -592,13 +526,9 @@ def compact_upsert_log(
 
     from pyspark.sql import functions as F
 
-    from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
-
     row_schema = _OUTPUT_SCHEMA
-    value_cols = ["event_id", "ts", "event_type", "value", "props", "_epoch"]
     if dead_col is not None:
         row_schema = row_schema + f", {dead_col} boolean"
-        value_cols = value_cols + [dead_col]
     with _sink_lock(sink_dir, exclusive=True):
         # crash recovery BEFORE reading (under the same exclusive lock the
         # swap holds): a previous compaction that died mid-swap leaves
@@ -617,13 +547,7 @@ def compact_upsert_log(
         shutil.rmtree(tmp_dir, ignore_errors=True)  # stale partial output
         log = _read_upsert_log(spark, sink_dir, row_schema)
         rows_before = log.count()
-        compacted = latest_by_key(
-            log,
-            key_cols=["user_id"],
-            order_cols=["_epoch", "ts", "event_id"],
-            value_cols=value_cols,
-            unique_order=True,
-        )
+        compacted = _log_head(log)
         if dead_col is not None and not retain_tombstones:
             compacted = compacted.filter(~F.col(dead_col))
         compacted = compacted.withColumn(
@@ -661,22 +585,42 @@ def _reap_at_exit(path: str) -> None:
     _EXIT_REAP.append(path)
 
 
+def _changelog_stream(
+    spark: SparkSession, path: str, tombstone_col: str | None = None,
+    files_per_trigger: int = 2,
+) -> DataFrame:
+    """The changelog replay every entry point folds: parquet files of the
+    events schema (plus the boolean ``tombstone_col``), ``files_per_trigger``
+    per micro-batch. The default 2 files/trigger keeps several
+    micro-batches (cross-batch state is the semantic under test —
+    latest-by-key is batching-insensitive) at half the per-batch
+    machinery cost."""
+    schema = EVENTS_SCHEMA
+    if tombstone_col is not None:
+        schema = schema + f", {tombstone_col} boolean"
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files_per_trigger)
+        .parquet(path)
+    )
+
+
 def _run_upsert_sink(
     spark: SparkSession, updates: DataFrame, checkpoint: str | None = None,
-    sink_dir: str | None = None, row_schema: str = _OUTPUT_SCHEMA,
-    dead_col: str | None = None,
-    head_order: tuple[str, ...] = ("_epoch", "ts", "event_id"),
+    sink_dir: str | None = None,
 ) -> DataFrame:
     """Drive the update stream to completion; materialize the view through a
     KEYED PARQUET UPSERT SINK (the Spark-native analogue of a compacted
     Kafka topic / KV store):
 
     - each micro-batch APPENDS its update rows — tagged with the commit
-      epoch — to a parquet log partitioned by key bucket (a distributed
-      executor-side write; nothing flows through the driver);
-    - the materialized view is the read-back latest row per key, ordered by
-      (epoch, ts, event_id) — one ``max_by`` aggregation, shuffle volume
-      O(distinct keys).
+      epoch unless they carry their own ``_epoch`` — to a parquet log
+      partitioned by key bucket (a distributed executor-side write;
+      nothing flows through the driver);
+    - the materialized view is the read-back :func:`_log_head` row per
+      key — one ``max_by`` aggregation, shuffle volume O(distinct keys);
+      when the updates carry the ``_dead`` flag, tombstone-headed keys
+      drop out.
 
     The round-1 version collected every batch into a driver dict — a driver
     bottleneck growing with key cardinality. This shape survives 100×: the
@@ -684,6 +628,8 @@ def _run_upsert_sink(
     """
     from pyspark.sql import functions as F
 
+    dead_col = "_dead" if "_dead" in updates.columns else None
+    stamp_epochs = "_epoch" not in updates.columns
     run_id = uuid.uuid4().hex[:8]
     own_ckpt = checkpoint is None
     if own_ckpt:
@@ -713,23 +659,26 @@ def _run_upsert_sink(
 
     epoch_base = 0
     with _sink_lock(sink_dir, exclusive=False):
-        if _os.path.isdir(sink_dir) and any(
+        if stamp_epochs and _os.path.isdir(sink_dir) and any(
             not f.startswith(".") for f in _os.listdir(sink_dir)
         ):
             prev_max = (
-                _read_upsert_log(spark, sink_dir, row_schema)
+                _read_upsert_log(spark, sink_dir)
                 .agg(F.max("_epoch"))
                 .collect()[0][0]
             )
             epoch_base = (prev_max + 1) if prev_max is not None else 0
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        if stamp_epochs:
+            batch_df = batch_df.withColumn(
+                "_epoch", F.lit(epoch_base + epoch_id)
+            )
         # SHARED lock: appends may run concurrently with each other but
         # never overlap compaction's exclusive directory swap
         with _sink_lock(sink_dir, exclusive=False):
             (
-                batch_df.withColumn("_epoch", F.lit(epoch_base + epoch_id))
-                .withColumn(
+                batch_df.withColumn(
                     "_bucket",
                     F.pmod(F.xxhash64("user_id"), F.lit(SINK_BUCKETS)),
                 )
@@ -772,11 +721,8 @@ def _run_upsert_sink(
             # from a throwaway checkpoint — only the sink must outlive us
             shutil.rmtree(checkpoint, ignore_errors=True)
 
-    return _log_head(
-        _read_upsert_log(spark, sink_dir, row_schema),
-        dead_col=dead_col,
-        order_cols=head_order,
-    )
+    row_schema = _OUTPUT_SCHEMA_DEAD if dead_col else _OUTPUT_SCHEMA
+    return _log_view(_read_upsert_log(spark, sink_dir, row_schema), dead_col)
 
 
 def latest_by_key_streaming(
@@ -788,23 +734,10 @@ def latest_by_key_streaming(
     duality). Pass ``checkpoint`` to keep the state store inspectable
     afterwards via :func:`read_table_state` (A10 interactive reads); pass
     ``sink_dir`` to keep the upsert log for :func:`compact_upsert_log`."""
-    # 2 files/trigger: multiple micro-batches (cross-batch state is the
-    # semantic under test — latest-by-key is batching-insensitive) at half
-    # the per-batch machinery cost
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_dir(sf_dir, "events"))
-    )
-    updates = src.groupBy("user_id").applyInPandasWithState(
-        _latest_update,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    src = _changelog_stream(spark, replay_dir(sf_dir, "events"))
     return _run_upsert_sink(
-        spark, updates, checkpoint=checkpoint, sink_dir=sink_dir
+        spark, _apws_fold(src.groupBy("user_id")), checkpoint=checkpoint,
+        sink_dir=sink_dir,
     )
 
 
@@ -839,10 +772,11 @@ def latest_by_key_streaming_salted(
     operator: Structured Streaming does not compose two update-mode
     stateful operators in one query, and the sink's read-back aggregation
     already runs per view materialization — O(keys·salt) rows, shuffle
-    O(keys). The log head orders by the DATA ``(ts, event_id)`` rather
-    than commit epoch: per-salt partials are monotone only within their
-    salt, so a later epoch may legitimately carry an older row from a
-    colder salt (see :func:`_log_head`).
+    O(keys). Its rows enter the log with a NULL ``_epoch``, so the log
+    head — and :func:`compact_upsert_log` — orders them by the DATA
+    ``(ts, event_id)`` rather than commit epoch: per-salt partials are
+    monotone only within their salt, so a later epoch may legitimately
+    carry an older row from a colder salt (see :func:`_log_head`).
 
     ``hot_keys`` — SALT ONLY THESE KEYS (the known hot tenants /
     celebrity users; the production pattern, since a changelog's hot keys
@@ -865,10 +799,8 @@ def latest_by_key_streaming_salted(
     """
     from pyspark.sql import functions as F
 
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(replay_path)
+    src = _changelog_stream(
+        spark, replay_path, files_per_trigger=files_per_trigger
     )
     # (event_id, ts) is the changelog position — unique per row, cheap to
     # hash, and NOT the grouping key (salting by a key-correlated value
@@ -887,16 +819,13 @@ def latest_by_key_streaming_salted(
             .cast("int")
         )
     src = src.withColumn("_salt", row_salt)
-    updates = src.groupBy("user_id", "_salt").applyInPandasWithState(
-        _latest_update,
-        outputStructType=_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    # per-salt partials carry no commit order across salts: a NULL _epoch
+    # makes the log head order them by (ts, event_id) alone
+    updates = _apws_fold(src.groupBy("user_id", "_salt")).withColumn(
+        "_epoch", F.lit(None).cast("long")
     )
     return _run_upsert_sink(
-        spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-        head_order=("ts", "event_id"),
+        spark, updates, checkpoint=checkpoint, sink_dir=sink_dir
     )
 
 
@@ -912,28 +841,17 @@ def latest_by_key_streaming_with_deletes(
     tombstone drops out of the materialized view, its state holding the
     tombstone marker until compaction GC — the streaming twin of the batch
     MERGE's tombstone branch (``operators/incremental.py``) and the
-    reference's ``Table.delete`` (``streams/Table.scala:31``).
+    reference's ``Table.delete`` (``streams/Table.scala:31``); see
+    :func:`_fold` for why the marker is kept.
 
     ``replay_path`` is a directory of parquet files in changelog order
     (events schema + the tombstone column), replayed 2 files/trigger so
     delete/re-insert sequences cross micro-batch boundaries.
     """
-    schema = EVENTS_SCHEMA + f", {tombstone_col} boolean"
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(replay_path)
-    )
-    updates = src.groupBy("user_id").applyInPandasWithState(
-        _latest_update_deletes(tombstone_col),
-        outputStructType=_OUTPUT_SCHEMA + ", _dead boolean",
-        stateStructType=_STATE_SCHEMA_DEAD,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    src = _changelog_stream(spark, replay_path, tombstone_col)
     return _run_upsert_sink(
-        spark, updates, checkpoint=checkpoint, sink_dir=sink_dir,
-        row_schema=_OUTPUT_SCHEMA + ", _dead boolean", dead_col="_dead",
+        spark, _apws_fold(src.groupBy("user_id"), tombstone_col),
+        checkpoint=checkpoint, sink_dir=sink_dir,
     )
 
 

@@ -84,12 +84,10 @@ SLOW_TESTS = {
     "test_review_r10_fixes.py::test_similarity_udfs_survive_empty_input",
     "test_review_r10_fixes.py::test_single_sentinel_flushes_outer_state",
     "test_review_r11_fixes.py::test_similarity_duplicate_vec_ids[q54_semantic_dedup]",
-    "test_review_r6_fixes.py::test_upsert_sink_epochs_monotone_across_runs",
     "test_review_r7_fixes.py::test_decode_and_pipeline_boundary_contracts",
     "test_review_r7_fixes.py::test_minhash_disk_persist_parity",
     "test_review_r8_fixes.py::test_upsert_sink_files_bounded_by_buckets",
     "test_salted_fold.py::test_streaming_salted_detected_equals_manual",
-    "test_salted_fold.py::test_streaming_salted_restart_appends_to_same_sink",
     "test_streaming_duality.py::test_compaction_concurrent_appends",
     "test_streaming_duality.py::test_random_changelog_duality[0-apply_in_pandas_with_state]",
     "test_streaming_duality.py::test_random_changelog_duality[0-transform_with_state]",

@@ -84,12 +84,15 @@ def test_streaming_salted_fold_matches_batch_oracle(
     spark, tmp_path, hot_frac
 ):
     from fs2_kafka_streams_spark.streaming.stateful import (
+        _read_upsert_log,
+        compact_upsert_log,
         latest_by_key_streaming_salted,
     )
 
     pdf = _hot_corpus(hot_frac, seed=41)
     replay = _replay(tmp_path, pdf, f"hot{int(hot_frac * 100)}")
-    got = latest_by_key_streaming_salted(spark, replay, salt=4)
+    sink = str(tmp_path / "sink")
+    got = latest_by_key_streaming_salted(spark, replay, salt=4, sink_dir=sink)
 
     batch = spark.createDataFrame(pdf.assign(ts=pdf["ts"].astype("datetime64[us]")))
     oracle = latest_by_key(batch, ["user_id"], ["ts", "event_id"]).select(
@@ -98,6 +101,11 @@ def test_streaming_salted_fold_matches_batch_oracle(
     assert _collect_sorted(got) == _collect_sorted(oracle)
     # the hot key must be present and correct, not just the cold tail
     assert any(r["user_id"] == 7 for r in got.collect())
+    # compaction keeps every key's head: salted partials spread over salts
+    # and epochs must compact by the data order, not by commit epoch
+    compact_upsert_log(spark, sink)
+    compacted = _read_upsert_log(spark, sink).select(*got.columns)
+    assert _collect_sorted(compacted) == _collect_sorted(oracle)
 
 
 def test_streaming_salted_restart_appends_to_same_sink(spark, tmp_path):

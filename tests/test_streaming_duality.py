@@ -153,7 +153,7 @@ def test_upsert_log_compaction(spark, tmp_path):
 
     from fs2_kafka_streams_spark.streaming.stateful import (
         SINK_BUCKETS,
-        _log_head,
+        _log_view,
         _read_upsert_log,
         compact_upsert_log,
         latest_by_key_streaming,
@@ -171,7 +171,7 @@ def test_upsert_log_compaction(spark, tmp_path):
     rows_before, rows_after = compact_upsert_log(spark, sink)
     assert rows_after == n_keys <= rows_before
     view_after = sorted(
-        tuple(r) for r in _log_head(_read_upsert_log(spark, sink)).collect()
+        tuple(r) for r in _log_view(_read_upsert_log(spark, sink)).collect()
     )
     assert view_after == view_before
 
@@ -189,7 +189,7 @@ def test_upsert_log_compaction(spark, tmp_path):
     update.write.mode("append").partitionBy("_bucket").parquet(sink)
     head = {
         r["user_id"]: (r["event_id"], r["event_type"])
-        for r in _log_head(_read_upsert_log(spark, sink)).collect()
+        for r in _log_view(_read_upsert_log(spark, sink)).collect()
     }
     assert head[some_user] == (10**12, "compact_test")
     assert len(head) == n_keys
@@ -461,7 +461,7 @@ def test_compaction_preserves_tombstones(spark, tmp_path):
 
     from fs2_kafka_streams_spark.catalog import Catalog
     from fs2_kafka_streams_spark.streaming.stateful import (
-        _log_head,
+        _log_view,
         _read_upsert_log,
         compact_upsert_log,
         latest_by_key_streaming_with_deletes,
@@ -499,7 +499,7 @@ def test_compaction_preserves_tombstones(spark, tmp_path):
     log = _read_upsert_log(spark, sink, schema)
     assert log.count() == log.select("user_id").distinct().count()
     view_after = sorted(
-        map(tuple, _log_head(log, dead_col="_dead").collect())
+        map(tuple, _log_view(log, dead_col="_dead").collect())
     )
     assert view_after == view_before
 
@@ -509,7 +509,7 @@ def test_compaction_preserves_tombstones(spark, tmp_path):
     )
     log_gc = _read_upsert_log(spark, sink, schema)
     assert log_gc.filter("_dead").count() == 0
-    view_gc = sorted(map(tuple, _log_head(log_gc, dead_col="_dead").collect()))
+    view_gc = sorted(map(tuple, _log_view(log_gc, dead_col="_dead").collect()))
     assert view_gc == view_before
 
 
@@ -526,7 +526,7 @@ def test_compaction_concurrent_appends(spark, tmp_path):
 
     from fs2_kafka_streams_spark.streaming.stateful import (
         SINK_BUCKETS,
-        _log_head,
+        _log_view,
         _read_upsert_log,
         _sink_lock,
         compact_upsert_log,
@@ -577,7 +577,7 @@ def test_compaction_concurrent_appends(spark, tmp_path):
     assert compactions >= 2, "race window never opened"
     head = {
         r["user_id"]: r["event_id"]
-        for r in _log_head(_read_upsert_log(spark, sink)).collect()
+        for r in _log_view(_read_upsert_log(spark, sink)).collect()
     }
     # every appended key survived with its row intact
     for i in range(n_appends):
