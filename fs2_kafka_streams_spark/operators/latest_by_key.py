@@ -77,11 +77,12 @@ def latest_by_key_salted(
     via map-side partial aggregation (each task keeps one candidate per
     key before the shuffle), so for the PLAIN aggregation this helper
     mostly documents the shape. It matters where no partial aggregation
-    exists: a grouped-map fold (``applyInPandas``: ALL rows of a key land
-    in one task), or as the batch oracle for the two-level STREAMING fold
-    (``streaming/stateful.py::latest_by_key_streaming_salted``), whose
-    per-key state groups are exactly such single-task folds. SCALE.md
-    "Skew axis" carries the measured per-trigger numbers.
+    exists — a grouped-map fold (``applyInPandas``: ALL rows of a key land
+    in one task) — and as the batch oracle for the two-level STREAMING
+    fold (``streaming/stateful.py::latest_by_key_streaming_salted``). That
+    fold is this same aggregation with the ``_salt`` key, so it too
+    partially aggregates before its state shuffle; SCALE.md "Skew axis"
+    carries per-trigger numbers measured on an earlier Python fold.
 
     The salt is a deterministic row hash (``operators/joins.py::
     deterministic_salt``) — retry-safe; never ``spark_partition_id``.

@@ -505,8 +505,12 @@ def q75_state_reader(spark, sf_dir):
 
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
+    # the fold's state layout is part of the key: a checkpoint cached by
+    # an earlier fold (the Python grouped-map one) has no max_by buffer
+    # for read_table_state to read, and Spark refuses to resume it
     key = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_size}:{int(st.st_mtime)}".encode()
+        f"{os.path.abspath(src)}:{st.st_size}:{int(st.st_mtime)}:max_by"
+        .encode()
     ).hexdigest()
     ckpt = os.path.join(CACHE_ROOT, "state_ckpt", key)
     os.makedirs(ckpt, exist_ok=True)

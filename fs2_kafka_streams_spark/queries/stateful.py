@@ -50,7 +50,8 @@ LATEST_BY_KEY_ORACLE = """
     tags=("streaming", "stateful", "core"),
 )
 def q38_stateful_latest(spark, sf_dir):
-    """Streaming latest-by-key via applyInPandasWithState equals batch Q17 —
+    """Streaming latest-by-key via a streaming max_by aggregation (batch
+    Q17's own call, run in update mode) equals batch Q17 —
     stream-table duality, the reference's core claim (A7/A9,
     ``streams/Tables.scala:110-138``)."""
     return latest_by_key_streaming(spark, sf_dir)

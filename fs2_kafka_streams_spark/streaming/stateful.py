@@ -3,21 +3,23 @@
 Reference semantics (``streams/Tables.scala:110-138``): consume a keyed
 changelog in chunks, upsert latest value per key into a RocksDB-backed
 store, expose the materialized view. Here the same contract runs as a
-Structured Streaming query: one fold (:func:`_fold` — the (ts, event_id)-max
-state tuple per key, optionally tombstone-aware — emitting one view row per
-touched key, :func:`_view_row`) runs on either state API
-(``applyInPandasWithState`` via :func:`_apws_fold`, or
-``transformWithStateInPandas`` via :class:`LatestProcessor`), the state
-store persisting between micro-batches, and a foreachBatch upsert sink
-appends the update rows to a keyed parquet log whose per-key head
-(:func:`_log_head`, the only place that orders sink rows) is the view and
-what compaction keeps.
+Structured Streaming query: the fold is Spark's own streaming aggregation
+(:func:`_agg_fold` — batch q17's ``max_by`` over ``(ts, event_id)``,
+optionally carrying the tombstone flag in its value struct) in update
+mode, the state store persisting one aggregation buffer per key between
+micro-batches, and a foreachBatch upsert sink appends the update rows to a
+keyed parquet log whose per-key head (:func:`_log_head`, the only place
+that orders sink rows) is the view and what compaction keeps. The typed
+``transformWithStateInPandas`` entries (``latest_by_key_tws*``) run the
+same contract through :class:`LatestProcessor`, whose event-time timers
+implement ``tombstone_retention``.
 
 At scale this is the right shape: state is partitioned by key across
 executors (RocksDB state store — configure
-``spark.sql.streaming.stateStore.providerClass``), each micro-batch touches
-only the keys present in the batch, and watermarking can bound state if the
-key domain churns.
+``spark.sql.streaming.stateStore.providerClass``), each micro-batch is
+partially aggregated per task before the state shuffle and touches only
+the keys present in the batch, and watermarking can bound state if the key
+domain churns.
 """
 
 from __future__ import annotations
@@ -30,7 +32,6 @@ import uuid
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fs2_kafka_streams_spark.streaming.conf import duration_us
 from fs2_kafka_streams_spark.streaming.replay import replay_dir
@@ -39,12 +40,15 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp_ntz, user_id long, "
     "event_type string, value double, props string"
 )
+# LatestProcessor's state tuple (the typed-state entries only)
 _STATE_SCHEMA = "event_id long, ts_us long, event_type string, value double, props string"
 # deletes-variant state carries the tombstone flag: a tombstone is KEPT in
 # state (with its (ts, event_id)) rather than removed, so a record OLDER
 # than the tombstone arriving in a later micro-batch loses the comparison
 # instead of resurrecting the key — Kafka's delete-retention window, and
-# exactly the batch MERGE's (ts, event_id)-max semantics.
+# exactly the batch MERGE's (ts, event_id)-max semantics. This holds for
+# both folds: the aggregation keeps ``_dead`` inside its max_by value
+# struct, LatestProcessor inside this tuple.
 #
 # Retention accounting: the kept marker makes dead-key STATE O(keys-ever-
 # seen) until it is reclaimed. compact_upsert_log(retain_tombstones=False)
@@ -52,9 +56,10 @@ _STATE_SCHEMA = "event_id long, ts_us long, event_type string, value double, pro
 # engine's ``tombstone_retention`` (event-time timers clear a tombstone
 # once the watermark passes its ts + retention: Kafka's delete.retention.ms,
 # with Kafka's own caveat that a record older than the tombstone arriving
-# AFTER retention can resurrect the key). The applyInPandasWithState
-# engine has no retention hook here; on an unbounded churning key domain
-# use the TWS engine with retention, or accept O(keys-ever) state.
+# AFTER retention can resurrect the key). The aggregation fold
+# (latest_by_key_streaming*) has no retention hook; on an unbounded
+# churning key domain use the TWS engine with retention, or accept
+# O(keys-ever) state.
 _STATE_SCHEMA_DEAD = _STATE_SCHEMA + ", dead boolean"
 _OUTPUT_SCHEMA = (
     "user_id long, event_id long, ts timestamp_ntz, "
@@ -66,11 +71,12 @@ _OUTPUT_SCHEMA_DEAD = _OUTPUT_SCHEMA + ", _dead boolean"
 def _pick_latest(pdf: pd.DataFrame, tombstone_col: str | None = None):
     """(ts, event_id)-max row of ONE pandas micro-batch frame as a state
     tuple ``(event_id, ts_us, event_type, value, props[, dead])`` plus the
-    winning index — the per-frame step of :func:`_fold`.
+    winning index — the per-frame step of :func:`_fold` (typed-state
+    entries only; the aggregation fold orders inside Spark).
 
     NULL-safe on the payload columns: a NULL event_type/props stays None
     (``str()`` would store the literal string ``'None'``, silently
-    diverging from the batch fold, which keeps NULL) and a NULL value
+    diverging from the aggregation fold, which keeps NULL) and a NULL value
     stays None (``float()`` would store NaN). A NULL ts orders SMALLEST —
     the numpy iNaT sentinel is the most-negative int64, which matches the
     batch ``max_by``'s NULLS-FIRST struct ordering — and round-trips back
@@ -119,19 +125,15 @@ def _fold_rank(cand) -> tuple:
 def _fold(best, frames, tombstone_col: str | None = None):
     """Fold pandas micro-batch frames into a key's state tuple: the
     (ts, event_id)-max of ``best`` (the stored tuple, or None for a new
-    key) and every frame's :func:`_pick_latest` candidate — the one fold
-    both state APIs run. Returns ``(best, source)``; ``source`` is the
-    ``(frame, index)`` the new best came from, or None when the stored
-    tuple still wins (nothing to write back).
-
-    With ``tombstone_col`` the tuple carries the delete flag and a
-    tombstone is kept as the head like any other change, so a record
-    OLDER than it arriving in a later micro-batch loses the comparison
-    and the key stays dead — identical to the batch MERGE, which keeps
-    the (ts, event_id)-max tombstone (``operators/incremental.py``). A
-    record NEWER than the tombstone re-inserts the key, as on a compacted
-    topic (``Table.delete``, ``streams/Table.scala:31``; duality-tested,
-    including the out-of-order late-record case, in
+    key) and every frame's :func:`_pick_latest` candidate — a Python copy
+    of :func:`_agg_fold`'s ``max_by`` ordering that exists only because
+    :class:`LatestProcessor` (the ``latest_by_key_tws*`` entries and their
+    ``tombstone_retention`` timers) cannot run a built-in aggregation.
+    Returns ``(best, source)``; ``source`` is the ``(frame, index)`` the
+    new best came from, or None when the stored tuple still wins (nothing
+    to write back). With ``tombstone_col`` the tuple carries the delete
+    flag, kept as the head like any other change (see :func:`_agg_fold`;
+    duality-tested, including the out-of-order late-record case, in
     tests/test_streaming_duality.py)."""
     source = None
     for pdf in frames:
@@ -161,41 +163,44 @@ def _view_row(key, best, tombstone_col: str | None = None) -> pd.DataFrame:
 
 
 def _fold_schemas(tombstone_col: str | None) -> tuple[str, str]:
-    """(state schema, emitted row schema) of the fold."""
+    """(state schema, emitted row schema) of :class:`LatestProcessor`."""
     if tombstone_col is None:
         return _STATE_SCHEMA, _OUTPUT_SCHEMA
     return _STATE_SCHEMA_DEAD, _OUTPUT_SCHEMA_DEAD
 
 
-def _apws_fold(grouped, tombstone_col: str | None = None) -> DataFrame:
-    """The fold on ``applyInPandasWithState``: last-write-wins upsert per
-    group exactly as the reference's in-memory table
-    (``streams/Table.scala:52-56``) — state overwrite, ordered by
-    changelog position, here (ts, event_id)."""
-    state_schema, row_schema = _fold_schemas(tombstone_col)
+def _agg_fold(
+    src: DataFrame, key_cols: tuple[str, ...] = ("user_id",),
+    tombstone_col: str | None = None,
+) -> DataFrame:
+    """The table fold as Spark's own streaming aggregation: batch q17's
+    :func:`~fs2_kafka_streams_spark.operators.latest_by_key.latest_by_key`
+    call (``max_by`` of the value struct over ``(ts, event_id)``, NULLS
+    FIRST), so stream and batch agree by construction. In update mode each
+    trigger emits the state row of every key it touched — last-write-wins
+    upsert exactly as the reference's table (``streams/Table.scala:52-56``).
 
-    def update(key, pdf_iter, state: GroupState):
-        best, source = _fold(
-            tuple(state.get) if state.exists else None, pdf_iter,
-            tombstone_col,
-        )
-        if best is not None:
-            if source is not None:
-                state.update(best)
-            yield _view_row(key, best, tombstone_col)
+    With ``tombstone_col`` the flag rides inside the value struct as
+    ``_dead``: a tombstone is kept as the head like any other change, so a
+    record OLDER than it arriving in a later micro-batch loses the
+    comparison and the key stays dead — identical to the batch MERGE, which
+    keeps the (ts, event_id)-max tombstone (``operators/incremental.py``). A
+    record NEWER than the tombstone re-inserts the key, as on a compacted
+    topic (``Table.delete``, ``streams/Table.scala:31``)."""
+    from fs2_kafka_streams_spark.operators.latest_by_key import latest_by_key
 
-    return grouped.applyInPandasWithState(
-        update,
-        outputStructType=row_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    value_cols = ["event_id", "ts", "event_type", "value", "props"]
+    if tombstone_col is not None:
+        src = src.withColumnRenamed(tombstone_col, "_dead")
+        value_cols.append("_dead")
+    return latest_by_key(
+        src, key_cols, ["ts", "event_id"], value_cols, unique_order=True
     )
 
 
 try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
     # The API's state server speaks protobuf — require it up front so an
-    # environment without it degrades to applyInPandasWithState instead of
+    # environment without it keeps only the aggregation entries instead of
     # crashing the driver worker. When the real distribution is absent the
     # vendored pure-Python wire-format shim (vendor/protobuf_shim) takes
     # over — PB_MODE records which one is active ("real" | "shim" | "none").
@@ -208,11 +213,13 @@ try:  # Spark 4.x arbitrary-state API; older clusters fall back to q38.
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     class LatestProcessor(StatefulProcessor):
-        """StatefulProcessor for ``transformWithStateInPandas``: the same
-        :func:`_fold` as :func:`_apws_fold`, on the newer arbitrary-state
-        API with a typed ValueState handle — the closest Spark analogue of
-        the reference's typed RocksDB table (``streams/Table.scala:115-137``,
-        ``Key.scala:3-17``).
+        """StatefulProcessor for ``transformWithStateInPandas``: the
+        :func:`_agg_fold` contract re-run in Python (:func:`_fold`) on the
+        arbitrary-state API with a typed ValueState handle — the closest
+        Spark analogue of the reference's typed RocksDB table
+        (``streams/Table.scala:115-137``, ``Key.scala:3-17``). It backs the
+        ``latest_by_key_tws*`` entries, and it is the one fold with
+        event-time timers, which ``tombstone_retention`` needs.
 
         ``retention_us`` (with ``tombstone_col``; requires event-time mode
         + a watermark, see :func:`latest_by_key_tws_with_deletes`) is
@@ -365,10 +372,10 @@ def latest_by_key_tws_with_deletes(
     tombstone_retention: str | None = None,
 ) -> DataFrame:
     """:func:`latest_by_key_streaming_with_deletes` on the typed-state API —
-    same changelog-with-tombstones contract, same materialized view, the
-    same :func:`_fold` driven through :class:`LatestProcessor`. Both state
-    APIs run the same duality test against the batch MERGE
-    (tests/test_streaming_duality.py).
+    same changelog-with-tombstones contract, same materialized view, with
+    :func:`_fold` driven through :class:`LatestProcessor` instead of the
+    aggregation. Both folds run the same duality test against the batch
+    MERGE (tests/test_streaming_duality.py).
 
     ``tombstone_retention`` (e.g. ``"5 minutes"``) enables the state-store
     delete-retention GC: event-time timers clear a tombstone marker once
@@ -736,8 +743,7 @@ def latest_by_key_streaming(
     ``sink_dir`` to keep the upsert log for :func:`compact_upsert_log`."""
     src = _changelog_stream(spark, replay_dir(sf_dir, "events"))
     return _run_upsert_sink(
-        spark, _apws_fold(src.groupBy("user_id")), checkpoint=checkpoint,
-        sink_dir=sink_dir,
+        spark, _agg_fold(src), checkpoint=checkpoint, sink_dir=sink_dir
     )
 
 
@@ -753,15 +759,17 @@ def latest_by_key_streaming_salted(
     """Hot-key-salted changelog→table materialization: the two-level fold
     SCALE.md "Skew axis" prescribes, as a real operator.
 
-    The single-state fold (:func:`latest_by_key_streaming`) funnels EVERY
-    row of a key through one state group per trigger — on a Zipf-tail
-    corpus the hot key's group is the whole trigger's critical path (one
-    Arrow round-trip carrying 95% of the batch, measured in SCALE.md).
-    Here each row scatters to one of ``salt`` sub-groups by a
+    The single-state fold (:func:`latest_by_key_streaming`) merges EVERY
+    row of a key in one state partition per trigger, after each task has
+    reduced the key's rows to one partial. SCALE.md's per-trigger stalls
+    were measured on an earlier Python grouped-map fold; no benchmark
+    workload has skewed keys, so whether salting still pays on the
+    aggregation fold is unmeasured. Here each row scatters to one of
+    ``salt`` sub-groups by a
     DETERMINISTIC row hash (``operators/joins.py::deterministic_salt`` on
     ``(event_id, ts)``; never ``spark_partition_id`` — retry-safe), the
-    stateful level folds per ``(user_id, _salt)`` so the hot key's work
-    spreads over ``salt`` parallel groups, and the upsert sink's log-head
+    stateful level folds per ``(user_id, _salt)`` so the hot key's state
+    spreads over ``salt`` state keys, and the upsert sink's log-head
     aggregation IS the second, tiny merge level: at most ``salt`` partial
     rows per key, merged by ``max_by`` on ``(ts, event_id)`` — the fold
     is associative and commutative, so salted ≡ unsalted ≡ batch
@@ -781,14 +789,13 @@ def latest_by_key_streaming_salted(
     ``hot_keys`` — SALT ONLY THESE KEYS (the known hot tenants /
     celebrity users; the production pattern, since a changelog's hot keys
     are stable and observable): everything else keeps ``_salt = 0``, so
-    the state-group count stays ≈ O(keys) + salt × |hot_keys|. This
-    matters, measured: full-row salting multiplies the PER-GROUP Arrow
-    round-trip overhead across every cold key each trigger — at 6M
-    events / hot95 the full-salt fold was 2.6× SLOWER per trigger (p50
-    2.3 s → 5.9 s) than unsalted because 1,500 key groups became 12,000,
-    while hot-only salting spreads the one hot group without touching the
-    cold 1,499 (numbers in SCALE.md "Skew axis"). ``None`` salts every
-    row — only sensible when most keys are hot or the key domain is tiny.
+    the state-key count stays ≈ O(keys) + salt × |hot_keys|. On the
+    earlier Python fold this mattered, measured: full-row salting
+    multiplied the per-group Arrow round-trip across every cold key —
+    at 6M events / hot95 it was 2.6× SLOWER per trigger than unsalted
+    (SCALE.md "Skew axis"); on the aggregation fold it still multiplies
+    state rows and sink partials by ``salt``. ``None`` salts every row —
+    only sensible when most keys are hot or the key domain is tiny.
     Pick ``salt`` ≈ the per-executor core count the hot key should fan
     out to.
 
@@ -821,8 +828,10 @@ def latest_by_key_streaming_salted(
     src = src.withColumn("_salt", row_salt)
     # per-salt partials carry no commit order across salts: a NULL _epoch
     # makes the log head order them by (ts, event_id) alone
-    updates = _apws_fold(src.groupBy("user_id", "_salt")).withColumn(
-        "_epoch", F.lit(None).cast("long")
+    updates = (
+        _agg_fold(src, ("user_id", "_salt"))
+        .drop("_salt")
+        .withColumn("_epoch", F.lit(None).cast("long"))
     )
     return _run_upsert_sink(
         spark, updates, checkpoint=checkpoint, sink_dir=sink_dir
@@ -842,7 +851,7 @@ def latest_by_key_streaming_with_deletes(
     tombstone marker until compaction GC — the streaming twin of the batch
     MERGE's tombstone branch (``operators/incremental.py``) and the
     reference's ``Table.delete`` (``streams/Table.scala:31``); see
-    :func:`_fold` for why the marker is kept.
+    :func:`_agg_fold` for why the marker is kept.
 
     ``replay_path`` is a directory of parquet files in changelog order
     (events schema + the tombstone column), replayed 2 files/trigger so
@@ -850,7 +859,7 @@ def latest_by_key_streaming_with_deletes(
     """
     src = _changelog_stream(spark, replay_path, tombstone_col)
     return _run_upsert_sink(
-        spark, _apws_fold(src.groupBy("user_id"), tombstone_col),
+        spark, _agg_fold(src, tombstone_col=tombstone_col),
         checkpoint=checkpoint, sink_dir=sink_dir,
     )
 
@@ -868,21 +877,16 @@ def read_table_state(spark: SparkSession, checkpoint: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    raw = spark.read.format("statestore").load(checkpoint)
-    # applyInPandasWithState persists (key struct, value struct) rows with
-    # the user state nested under value.groupState; ts is epoch micros
-    # (state schema, _STATE_SCHEMA).
-    st = F.col("value.groupState")
-    # NTZ via timestampadd on an NTZ epoch literal — timestamp_micros()
-    # would build an instant whose NTZ cast shifts by the session TZ
-    return raw.select(
+    # the aggregation persists (key struct, value struct) rows with the
+    # max_by buffer's winning value struct under
+    # value.valueWithExtremumOrdering (ts already timestamp_ntz); a
+    # tombstoned key stays in state with its _dead flag, which the view
+    # columns leave out
+    st = F.col("value.valueWithExtremumOrdering")
+    return spark.read.format("statestore").load(checkpoint).select(
         F.col("key.user_id").alias("user_id"),
-        st.getField("event_id").alias("event_id"),
-        F.expr(
-            "timestampadd(MICROSECOND, value.groupState.ts_us, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-        ).alias("ts"),
-        st.getField("event_type").alias("event_type"),
-        st.getField("value").alias("value"),
-        st.getField("props").alias("props"),
+        *[
+            st.getField(c).alias(c)
+            for c in ("event_id", "ts", "event_type", "value", "props")
+        ],
     )

@@ -286,7 +286,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
         }
 
     def latest_updates(src):
-        return stateful._apws_fold(src.groupBy("user_id"))
+        return stateful._agg_fold(src)
 
     def funnel_updates(src):
         return src.groupBy("user_id").applyInPandasWithState(
@@ -363,7 +363,7 @@ def run_streaming_section(spark, out: str, scales: list[int]) -> list[dict]:
                     .cast("int")
                 )
             salted = src.withColumn("_salt", row_salt)
-            return stateful._apws_fold(salted.groupBy("user_id", "_salt"))
+            return stateful._agg_fold(salted, ("user_id", "_salt"))
 
         return build
 

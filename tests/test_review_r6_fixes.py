@@ -364,7 +364,7 @@ def test_upsert_sink_epochs_monotone_across_runs(spark, tmp_path):
     from tests.conftest import write_replay_files
     from fs2_kafka_streams_spark.streaming.stateful import (
         _run_upsert_sink,
-        _apws_fold,
+        _agg_fold,
         EVENTS_SCHEMA,
     )
 
@@ -389,7 +389,7 @@ def test_upsert_sink_epochs_monotone_across_runs(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(rep))
         )
-        updates = _apws_fold(src.groupBy("user_id"))
+        updates = _agg_fold(src)
         return _run_upsert_sink(spark, updates, sink_dir=sink)
 
     # run 1: five micro-batches -> epochs 0..4, head ts=50us
@@ -398,6 +398,58 @@ def test_upsert_sink_epochs_monotone_across_runs(spark, tmp_path):
     # raw epoch 0 < 4 would lose to run 1's head without the base
     head = run([mk(9, 99, 9.0)], 1, "b").collect()
     assert len(head) == 1 and head[0].event_id == 9
+
+
+def test_grouped_map_fold_checkpoint_refused(spark, tmp_path):
+    """A checkpoint written by a Python grouped-map fold (the table fold
+    before it became a ``max_by`` aggregation) must be refused loudly,
+    never misread: restarting the aggregation over it fails on the state
+    operator metadata, and the state read finds no aggregation buffer."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from tests.conftest import write_replay_files
+    from fs2_kafka_streams_spark.streaming.stateful import (
+        EVENTS_SCHEMA,
+        latest_by_key_streaming_with_deletes,
+        read_table_state,
+    )
+
+    def mk(eid):
+        return pd.DataFrame([{
+            "event_id": eid, "ts": pd.Timestamp(eid, unit="us"),
+            "user_id": 1, "event_type": "view", "value": float(eid),
+            "props": "{}", "deleted": False,
+        }])
+
+    def keep_max_id(key, pdfs, state):
+        state.update((int(max(pdf["event_id"].max() for pdf in pdfs)),))
+        yield pd.DataFrame({"user_id": [key[0]]})
+
+    replay, ckpt = tmp_path / "rep", str(tmp_path / "ckpt")
+    write_replay_files(replay, [mk(1)])
+    (
+        spark.readStream.schema(EVENTS_SCHEMA + ", deleted boolean")
+        .parquet(str(replay))
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            keep_max_id, "user_id long", "event_id long", "update",
+            GroupStateTimeout.NoTimeout,
+        )
+        .writeStream.outputMode("update").format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start().awaitTermination()
+    )
+    write_replay_files(replay, [mk(1), mk(2)])
+
+    with pytest.raises(
+        Exception,
+        match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA",
+    ):
+        latest_by_key_streaming_with_deletes(
+            spark, str(replay), checkpoint=ckpt
+        )
+    with pytest.raises(Exception, match="valueWithExtremumOrdering"):
+        read_table_state(spark, ckpt).collect()
 
 
 def test_compaction_recovers_from_crashed_swap(spark, tmp_path):

@@ -305,7 +305,11 @@ def test_q38b_tws_matches_batch(spark):
 
 def _deletes_engine(name):
     """Resolve a tombstone-aware streaming engine by name, skipping the
-    typed-state one when the TWS gate is closed."""
+    typed-state one when the TWS gate is closed. The
+    ``apply_in_pandas_with_state`` id is historical (it keeps the node ids
+    stable): it now runs the aggregation fold,
+    ``latest_by_key_streaming_with_deletes``; ``transform_with_state`` runs
+    ``latest_by_key_tws_with_deletes``."""
     from fs2_kafka_streams_spark.streaming import stateful
 
     if name == "apply_in_pandas_with_state":
@@ -321,8 +325,8 @@ def _deletes_engine(name):
 def test_streaming_deletes_match_batch_merge(spark, tmp_path, engine):
     """Tombstoned changelog: streaming latest-by-key keeping a tombstone
     marker in state ≡ the batch MERGE's tombstone branch
-    (``operators/incremental.py``) — on BOTH state APIs
-    (``applyInPandasWithState`` and ``transformWithStateInPandas``).
+    (``operators/incremental.py``) — on BOTH folds (the streaming
+    ``max_by`` aggregation and ``transformWithStateInPandas``).
     Covers keys whose head is a tombstone (dropped), keys re-inserted after
     a tombstone, and delete/re-insert sequences crossing micro-batch
     boundaries (2-file triggers over a 5-file replay)."""
@@ -394,8 +398,8 @@ def test_late_old_record_cannot_resurrect_deleted_key(spark, tmp_path, engine):
     tombstone arriving in a LATER micro-batch must NOT resurrect the key —
     the tombstone marker kept in state wins the comparison, exactly as the
     batch MERGE keeps the (ts, event_id)-max tombstone. A record NEWER than
-    the tombstone still re-inserts (compacted-topic semantics). Both state
-    APIs."""
+    the tombstone still re-inserts (compacted-topic semantics). Both
+    folds."""
     import pandas as pd
 
     from fs2_kafka_streams_spark.operators.incremental import apply_changes
@@ -592,7 +596,7 @@ def test_random_changelog_duality(spark, tmp_path, engine, seed):
     """Seeded fuzz of the tombstone-aware streaming fold: a RANDOM
     changelog — duplicate timestamps (event_id tie-breaks), ~25%
     tombstones, rows shuffled into files with no ordering at all — must
-    fold to exactly the batch MERGE's answer on both state APIs. This is
+    fold to exactly the batch MERGE's answer on both folds. This is
     the property the handcrafted cases sample: the (ts, event_id)-max
     comparison with a kept tombstone marker is delivery-order-invariant,
     so ANY permutation of the log across micro-batches converges to the
